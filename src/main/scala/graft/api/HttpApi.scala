@@ -3,6 +3,8 @@ package graft.api
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 
+import scala.util.control.NonFatal
+
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import com.fasterxml.jackson.databind.JsonNode
 
@@ -189,11 +191,11 @@ final class HttpApi(spark: SparkSession, store: GraphStore,
     } catch {
       case _: BadRequest =>
         try write(ex, 400, """{"status":"Bad request"}""")
-        catch { case _: Throwable => () }
-      case e: Throwable =>
+        catch { case NonFatal(_) => () }
+      case NonFatal(e) =>
         // mirror the reference's per-endpoint catch (`index.py:90-94`)
         try write(ex, 500, """{"status":"Internal server error"}""")
-        catch { case _: Throwable => () }
+        catch { case NonFatal(_) => () }
         org.slf4j.LoggerFactory.getLogger(classOf[HttpApi])
           .warn(s"request failed: ${e.getMessage}")
     } finally ex.close()

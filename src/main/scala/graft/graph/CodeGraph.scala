@@ -1,23 +1,26 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 import scala.collection.mutable.ArrayBuffer
 
 /** Stateful facade over one repo graph — the Spark-native equivalent of the
   * reference's `Graph` class (`/root/reference/api/graph.py`).
   *
-  * Holds the current snapshot, applies mutations through
-  * [[Mutations.applyOp]], and implements the backlog protocol (C8,
-  * `api/graph.py:92-171`): when enabled, any op whose [[ChangeSummary]]
-  * reports a change is recorded (serialized via [[OpLog]]) — this feeds the
-  * git time-travel machinery (SURVEY §2.6 F5/F6).
+  * Holds the current snapshot, applies mutations, and implements the
+  * backlog protocol (C8, `api/graph.py:92-171`): when enabled, any op whose
+  * [[ChangeSummary]] reports a change is recorded (serialized via [[OpLog]])
+  * — this feeds the git time-travel machinery (SURVEY §2.6 F5/F6). Batch
+  * ops are the only logged form, and [[mutate]] is the one place an op
+  * maps to its rewrite: a replayed ingest batch runs through the same
+  * typed batch method ([[addEntities]] etc.) that captured it.
   *
   * Mutations checkpoint the snapshot every few ops to keep plan lineage
   * bounded (read-modify-write chains otherwise nest plans indefinitely).
   */
 final class CodeGraph(val spark: SparkSession, val name: String,
     store: Option[GraphStore] = None) {
+  import GraphOp._
 
   private var current: PropertyGraph =
     store.filter(_.exists(name)).map(_.load(name)).getOrElse(GraphSchema.empty(spark))
@@ -36,16 +39,16 @@ final class CodeGraph(val spark: SparkSession, val name: String,
 
   /** Apply one op, log it if it changed anything (change detection mirrors
     * `api/graph.py:152-169`), and return the affected rows. */
-  def mutate(op: GraphOp): MutationResult = {
-    val res = Mutations.applyOp(current, op)
-    current = res.graph
-    opsSinceCheckpoint += 1
-    if (opsSinceCheckpoint >= 4) { // bound lineage growth
-      current = current.checkpointed()
-      opsSinceCheckpoint = 0
-    }
-    if (backlogEnabled && res.summary.changed) backlog += OpLog.encode(op)
-    res
+  def mutate(op: GraphOp): MutationResult = op match {
+    case o: AddEntitiesBatch => addEntities(o.toDF(spark))
+    case o: AddFilesBatch => addFiles(o.toDF(spark))
+    case o: ConnectEntitiesBatch => connectEntities(o.toDF(spark))
+    case o: AddCallsBatch => addCalls(o.toDF(spark))
+    case o: SetNodesMetadata =>
+      record(o, track(Mutations.setNodesMetadata(current, o.ids, o.values)))
+    case o: DeleteFiles => record(o, track(Mutations.deleteFiles(current, o.files)))
+    case o: SetFilesCoverage =>
+      record(o, track(Mutations.setFilesCoverage(current, o.rows)))
   }
 
   /** M11 `rerun_query` (`api/graph.py:540-545`): replay serialized ops. */
@@ -59,34 +62,14 @@ final class CodeGraph(val spark: SparkSession, val name: String,
     * (deterministic ID assignment) with far fewer entries. Batches during
     * a history walk are one commit's diff — small by construction. */
   def addEntities(batch: DataFrame): MutationResult =
-    logged(batch, Mutations.addEntities(current, _)) { rows =>
-      GraphOp.AddEntitiesBatch(rows.map(r => GraphOp.EntityRow(
-        r.getAs[String]("label"), r.getAs[String]("name"),
-        r.getAs[String]("path"), r.getAs[Long]("src_start"),
-        r.getAs[Long]("src_end"), r.getAs[String]("doc"),
-        Option(r.getAs[scala.collection.Map[String, String]]("props"))
-          .map(_.toMap).getOrElse(Map.empty))))
-    }
+    logged(batch, Mutations.addEntities(current, _))(AddEntitiesBatch.fromRows)
   def addFiles(batch: DataFrame): MutationResult =
-    logged(batch, Mutations.addFiles(current, _)) { rows =>
-      GraphOp.AddFilesBatch(rows.map(r => GraphOp.FileKey(
-        r.getAs[String]("path"), r.getAs[String]("name"),
-        r.getAs[String]("ext"))))
-    }
+    logged(batch, Mutations.addFiles(current, _))(AddFilesBatch.fromRows)
   def connectEntities(batch: DataFrame): MutationResult =
-    logged(batch, Mutations.connectEntities(current, _)) { rows =>
-      GraphOp.ConnectEntitiesBatch(rows.map(r => GraphOp.EdgeRow(
-        r.getAs[Long]("src"), r.getAs[Long]("dst"), r.getAs[String]("type"),
-        Option(r.getAs[scala.collection.Map[String, String]]("props"))
-          .map(_.toMap).getOrElse(Map.empty))))
-    }
+    logged(batch, Mutations.connectEntities(current, _))(
+      ConnectEntitiesBatch.fromRows)
   def addCalls(batch: DataFrame): MutationResult =
-    logged(batch, Mutations.addCalls(current, _)) { rows =>
-      GraphOp.AddCallsBatch(rows.map(r => GraphOp.CallRow(
-        r.getAs[Long]("src"), r.getAs[Long]("dst"), r.getAs[Long]("pos"),
-        if (r.schema.fieldNames.contains("text")) r.getAs[String]("text")
-        else null)))
-    }
+    logged(batch, Mutations.addCalls(current, _))(AddCallsBatch.fromRows)
 
   /** Commit-graph batch mutations (M8–M10 bulk forms). Git graphs are
     * never backlogged (the reference's GitGraph has none,
@@ -106,15 +89,19 @@ final class CodeGraph(val spark: SparkSession, val name: String,
     * by construction. Zero extra cost with the backlog off. */
   private def logged(batch: DataFrame,
       run: DataFrame => MutationResult)(
-      toOp: Seq[org.apache.spark.sql.Row] => GraphOp): MutationResult = {
+      toOp: Seq[Row] => GraphOp): MutationResult = {
     if (!backlogEnabled) return track(run(batch))
     val rows = batch.collect().toSeq
     val pinned = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](
+      new java.util.ArrayList[Row](
         scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
       batch.schema)
-    val res = track(run(pinned))
-    if (res.summary.changed) backlog += OpLog.encode(toOp(rows))
+    record(toOp(rows), track(run(pinned)))
+  }
+
+  /** Backlog an applied op if it changed anything. */
+  private def record(op: => GraphOp, res: MutationResult): MutationResult = {
+    if (backlogEnabled && res.summary.changed) backlog += OpLog.encode(op)
     res
   }
 

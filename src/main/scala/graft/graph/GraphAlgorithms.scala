@@ -138,27 +138,18 @@ object GraphAlgorithms {
     * absent from the sums (no in-links: rank = the base constant after
     * iteration 1) is folded into the contribution join as the outer-join
     * default, so the full node list is joined exactly once at the end, not
-    * once per iteration. Lineage is cut every 3 iterations. The edge side
+    * once per iteration. Lineage is cut every iteration: with a cut per
+    * iteration every iteration ≥2 is the same literal-free plan shape
+    * (scan-of-checkpoint ⋈ eDeg → grouped sum), so a cold session
+    * Janino-compiles ~2 shapes instead of one per chained depth — cold
+    * wall 22.9 s vs 25.4 s (cadence 3) vs 25.2 s (cadence 10) at sf0.1,
+    * steady-state equal within noise (~4.5 s). The edge side
     * is repartition(src)+cache()d — NOT localCheckpoint'ed, which drops
     * outputPartitioning (the scan comes back as an ExistingRDD with
     * unknown distribution) and would re-shuffle the edge table under every
     * iteration's join; the cache keeps the hash distribution visible so
     * only the sparse rank side moves. Headroom: n_nodes × scale × 17 must
     * stay below 2⁶³ — at 10¹² nodes drop `scale` to 10⁵. */
-  /** Lineage-cut cadence for the PageRank loop. Every iteration (1) is the
-    * default on MEASURED grounds: with a cut per iteration every iteration
-    * ≥2 is the same literal-free plan shape (scan-of-checkpoint ⋈ eDeg →
-    * grouped sum), so a cold session Janino-compiles ~2 shapes instead of
-    * one per chained depth — cold wall 22.9 s vs 25.4 s (cadence 3) vs
-    * 25.2 s (cadence 10) at sf0.1, steady-state equal within noise
-    * (~4.5 s). The same cadence is what cuts lineage at 100 TB scale
-    * anyway. AQE on/off was also profiled for the loop (judge item 4):
-    * off saves ~1 s of per-materialization re-planning on warm runs —
-    * kept ON as the default because AQE's skew handling is worth more on
-    * real graphs; GRAFT_PR_AQE=off is the profiling escape hatch. */
-  private val CheckpointEvery =
-    sys.env.getOrElse("GRAFT_PR_CKPT", "1").toInt
-
   def pageRankFixed(edges: DataFrame, iters: Int = 10,
       scale: Long = 1000000L, srcCol: String = "src",
       dstCol: String = "dst"): DataFrame = {
@@ -186,20 +177,13 @@ object GraphAlgorithms {
     // grouped keys (already distinct); only dst needs a dedup pass.
     val nodes = eDeg.select(col("src").as("id"))
       .union(raw.select(col("dst").as("id"))).distinct().localCheckpoint(true)
-    val spark = edges.sparkSession
-    val aqeOff = sys.env.get("GRAFT_PR_AQE").contains("off")
-    val aqePrev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    if (aqeOff) spark.conf.set("spark.sql.adaptive.enabled", "false")
     val base = scale * 3 / 20 // (1 - d) mass per node, d = 17/20
     // rank_{k-1} as an expression over the sparse sums (null ⇒ no in-links)
     val rankOfSum = lit(base) +
       expr("(17 * coalesce(s, cast(0 as bigint))) div 20")
     var summed: DataFrame = null // null ⇒ iteration 0: rank = scale
-    // try/finally: the AQE override is session-global, so an exception
-    // mid-loop must not leak it into concurrently-planning queries (the
-    // bench warmup runs 8 threads on this session) or the timed pass.
     try {
-      for (i <- 1 to iters) {
+      for (_ <- 1 to iters) {
         val joined =
           if (summed == null) eDeg.withColumn("rank", lit(scale))
           else eDeg
@@ -208,11 +192,9 @@ object GraphAlgorithms {
         summed = joined
           .select(col("dst").as("id"), expr("rank div odeg").as("c"))
           .groupBy(col("id")).agg(sum(col("c")).as("s"))
-        if (i % CheckpointEvery == 0 || i == iters)
-          summed = summed.localCheckpoint(true)
+          .localCheckpoint(true)
       }
     } finally {
-      if (aqeOff) spark.conf.set("spark.sql.adaptive.enabled", aqePrev)
       // in the finally: an exception mid-loop (e.g. during the concurrent
       // bench warmup) must not leave the cached edge table orphaned in
       // the long-lived session's storage pool

@@ -45,7 +45,8 @@ object MutationResult {
 }
 
 /** All graph mutations as pure `PropertyGraph => PropertyGraph` rewrites
-  * (SURVEY.md §2.4 M1–M11). Batch-first: the reference pays one network
+  * (SURVEY.md §2.4 M1–M10; M11 replay dispatches through
+  * `CodeGraph.mutate`). Batch-first: the reference pays one network
   * round-trip per entity (`api/graph.py:150` called per AST node — the
   * anti-goal in BASELINE.md); here every op is a single join-based rewrite
   * job over arbitrarily large batches.
@@ -69,21 +70,18 @@ object Mutations {
   }
 
   /** Deterministic sequential ID assignment (SURVEY §4.3): sort the insert
-    * batch on its merge key, then number rows `startId+1 ..` via
-    * zipWithIndex (distributed sort — no single-partition window; the
-    * global order, and therefore every assigned ID, is a pure function of
-    * the batch contents). Never `monotonically_increasing_id`: IDs are
-    * public API surface (`api/index.py:277-288`) and must be replayable. */
-  def assignIds(df: DataFrame, keyCols: Seq[String], startId: Long): DataFrame =
-    assignIdsCounted(df, keyCols, startId)._1
-
-  /** Like [[assignIds]] but also returns the batch size. One eager job
-    * (`localCheckpoint`) materializes the sorted batch; the zipWithIndex
-    * offset pass, the count, and every later consumer read the checkpointed
-    * partitions instead of recomputing the upstream join. Checkpointing
-    * before zipWithIndex is also a correctness requirement: the sort's range
-    * partitioner samples, so an unpinned recompute could shift rows across
-    * partition boundaries after the offsets were taken. */
+    * batch on its merge key, then number rows `startId+1 ..` (distributed
+    * sort — no single-partition window; the global order, and therefore
+    * every assigned ID, is a pure function of the batch contents). Never
+    * `monotonically_increasing_id`: IDs are public API surface
+    * (`api/index.py:277-288`) and must be replayable. Returns the numbered
+    * rows and the batch size. One eager job (`localCheckpoint`)
+    * materializes the sorted batch; the offset pass, the count, and every
+    * later consumer read the checkpointed partitions instead of recomputing
+    * the upstream join. Checkpointing before numbering is also a
+    * correctness requirement: the sort's range partitioner samples, so an
+    * unpinned recompute could shift rows across partition boundaries after
+    * the offsets were taken. */
   private def assignIdsCounted(df: DataFrame, keyCols: Seq[String],
       startId: Long): (DataFrame, Long) = {
     val sorted = df.sort(keyCols.map(c => col(c).asc_nulls_first): _*)
@@ -253,16 +251,6 @@ object Mutations {
         propertiesSet = nInserted + upd.count()))
   }
 
-  def addEntity(g: PropertyGraph, label: String, name: String, path: String,
-      srcStart: Long, srcEnd: Long, doc: String,
-      props: Map[String, String]): MutationResult = {
-    val spark = g.nodes.sparkSession
-    import spark.implicits._
-    val b = Seq((label, name, path, srcStart, srcEnd, doc, props))
-      .toDF("label", "name", "path", "src_start", "src_end", "doc", "props")
-    addEntities(g, b)
-  }
-
   // ---------------------------------------------------------------- M2
 
   /** M2 `add_file` (`api/graph.py:392-406`): upsert `File:Searchable` on
@@ -308,13 +296,6 @@ object Mutations {
         nodesKnownEmpty = false),
       resultIds,
       ChangeSummary(nodesCreated = nInserted))
-  }
-
-  def addFile(g: PropertyGraph, path: String, name: String,
-      ext: String): MutationResult = {
-    val spark = g.nodes.sparkSession
-    import spark.implicits._
-    addFiles(g, Seq((path, name, ext)).toDF("path", "name", "ext"))
   }
 
   // ---------------------------------------------------------------- M3
@@ -368,14 +349,6 @@ object Mutations {
         ChangeSummary(relationshipsCreated = toInsert.count(),
           propertiesSet = nUpdatedProps)
       })
-  }
-
-  def connectEntities(g: PropertyGraph, relType: String, src: Long, dst: Long,
-      props: Map[String, String]): MutationResult = {
-    val spark = g.nodes.sparkSession
-    import spark.implicits._
-    connectEntities(g,
-      Seq((src, dst, relType, props)).toDF("src", "dst", "type", "props"))
   }
 
   // ---------------------------------------------------------------- M4
@@ -445,17 +418,11 @@ object Mutations {
 
   // ---------------------------------------------------------------- M6
 
-  /** M6 `set_file_coverage` (`api/graph.py:468-480`): set the file's
-    * `coverage_precentage`; when it is exactly 1.0, cascade 1.0 to every
-    * Function the file DEFINES (conditional 1-hop cascade). */
-  def setFileCoverage(g: PropertyGraph, path: String, name: String, ext: String,
-      coverage: Double): MutationResult =
-    setFilesCoverage(g,
-      Seq(GraphOp.FileCoverageRow(path, name, ext, coverage)))
-
-  /** Batched [[setFileCoverage]] — one nodes rewrite for a whole tracefile
-    * (the lcov writeback applies hundreds of file percentages at once;
-    * per-file mutations would be one sequential Spark job each). Duplicate
+  /** M6 `set_file_coverage` (`api/graph.py:468-480`), batched: set each
+    * file's `coverage_precentage`; when it is exactly 1.0, cascade 1.0 to
+    * every Function the file DEFINES (conditional 1-hop cascade). One nodes
+    * rewrite for a whole tracefile (the lcov writeback applies hundreds of
+    * file percentages at once; per-file mutations would be one sequential Spark job each). Duplicate
     * file keys keep the LAST row (the reference's sequential SETs —
     * last record wins). */
   def setFilesCoverage(g: PropertyGraph,
@@ -546,27 +513,11 @@ object Mutations {
     addEntities(g, b)
   }
 
-  def addCommit(g: PropertyGraph, hash: String, author: String,
-      message: String, date: Long): MutationResult = {
-    val spark = g.nodes.sparkSession
-    import spark.implicits._
-    addCommits(g, Seq((hash, author, message, date))
-      .toDF("hash", "author", "message", "date"))
-  }
-
-  /** M9 `connect_commits` (`api/git_utils/git_graph.py:99-113`): materialize
-    * both directions — (child)-[:PARENT]->(parent), (parent)-[:CHILD]->(child). */
-  def connectCommits(g: PropertyGraph, childHash: String,
-      parentHash: String): MutationResult = {
-    val spark = g.nodes.sparkSession
-    import spark.implicits._
-    connectCommitsBatch(g,
-      Seq((childHash, parentHash)).toDF("child_hash", "parent_hash"))
-  }
-
-  /** Batched M9: `pairs` has (child_hash, parent_hash); hash→id resolution
-    * is a join against the Commit nodes (no per-pair driver lookups — a
-    * 10k-commit history connects in one mutation). */
+  /** M9 `connect_commits` (`api/git_utils/git_graph.py:99-113`), batched:
+    * materialize both directions — (child)-[:PARENT]->(parent),
+    * (parent)-[:CHILD]->(child). `pairs` has (child_hash, parent_hash);
+    * hash→id resolution is a join against the Commit nodes (no per-pair
+    * driver lookups — a 10k-commit history connects in one mutation). */
   def connectCommitsBatch(g: PropertyGraph, pairs: DataFrame): MutationResult = {
     val commits = g.nodes.filter(array_contains(col("labels"), "Commit"))
       .select(col("name").as("_hash"), col("id").as("_cid"))
@@ -585,18 +536,10 @@ object Mutations {
   }
 
   /** M10 `set_parent_transition` / `set_child_transition`
-    * (`api/git_utils/git_graph.py:116-141`): store the op-log arrays on the
-    * PARENT/CHILD edge between two commits. */
-  def setTransition(g: PropertyGraph, fromHash: String, toHash: String,
-      relType: String, queries: Seq[String], params: Seq[String]): MutationResult = {
-    val spark = g.nodes.sparkSession
-    import spark.implicits._
-    setTransitions(g, Seq((fromHash, toHash, relType, queries, params))
-      .toDF("from_hash", "to_hash", "rel_type", "queries", "params"))
-  }
-
-  /** Batched M10: one edge-table rewrite stores EVERY transition of a
-    * history walk (`batch`: from_hash, to_hash, rel_type, queries, params).
+    * (`api/git_utils/git_graph.py:116-141`), batched: store the op-log
+    * arrays on the PARENT/CHILD edge between two commits. One edge-table
+    * rewrite stores EVERY transition of a history walk (`batch`: from_hash,
+    * to_hash, rel_type, queries, params).
     * Hashes resolve via join; the update is a left join on (src, dst,
     * type) — no per-transition scans. */
   def setTransitions(g: PropertyGraph, batch: DataFrame): MutationResult = {
@@ -622,50 +565,5 @@ object Mutations {
       resolved.select(col("_usrc").as("src"), col("_udst").as("dst"),
         col("_utype").as("type")),
       ChangeSummary(propertiesSet = 2 * resolved.count())) // lazy (by-name)
-  }
-
-  // ---------------------------------------------------------------- M11
-
-  /** M11 `rerun_query` (`api/graph.py:540-545`): replay one logged op. */
-  def applyOp(g: PropertyGraph, op: GraphOp): MutationResult = op match {
-    case o: GraphOp.AddEntity =>
-      addEntity(g, o.label, o.name, o.path, o.srcStart, o.srcEnd, o.doc, o.props)
-    case o: GraphOp.AddFile => addFile(g, o.path, o.name, o.ext)
-    case o: GraphOp.ConnectEntities =>
-      connectEntities(g, o.relType, o.src, o.dst, o.props)
-    case o: GraphOp.AddCall =>
-      val spark = g.nodes.sparkSession
-      import spark.implicits._
-      addCalls(g, Seq((o.callerId, o.calleeId, o.pos)).toDF("src", "dst", "pos"))
-    case o: GraphOp.SetNodesMetadata => setNodesMetadata(g, o.ids, o.values)
-    case o: GraphOp.SetFileCoverage =>
-      setFileCoverage(g, o.path, o.name, o.ext, o.coverage)
-    case o: GraphOp.SetFilesCoverage => setFilesCoverage(g, o.rows)
-    case o: GraphOp.DeleteFiles => deleteFiles(g, o.files)
-    case o: GraphOp.AddCommit => addCommit(g, o.hash, o.author, o.message, o.date)
-    case o: GraphOp.ConnectCommits => connectCommits(g, o.childHash, o.parentHash)
-    case o: GraphOp.SetTransition =>
-      setTransition(g, o.fromHash, o.toHash, o.relType, o.queries, o.params)
-    case o: GraphOp.AddEntitiesBatch =>
-      val spark = g.nodes.sparkSession
-      import spark.implicits._
-      addEntities(g, o.rows.map(r =>
-          (r.label, r.name, r.path, r.srcStart, r.srcEnd, r.doc, r.props))
-        .toDF("label", "name", "path", "src_start", "src_end", "doc", "props"))
-    case o: GraphOp.AddFilesBatch =>
-      val spark = g.nodes.sparkSession
-      import spark.implicits._
-      addFiles(g, o.rows.map(r => (r.path, r.name, r.ext))
-        .toDF("path", "name", "ext"))
-    case o: GraphOp.ConnectEntitiesBatch =>
-      val spark = g.nodes.sparkSession
-      import spark.implicits._
-      connectEntities(g, o.rows.map(r => (r.src, r.dst, r.relType, r.props))
-        .toDF("src", "dst", "type", "props"))
-    case o: GraphOp.AddCallsBatch =>
-      val spark = g.nodes.sparkSession
-      import spark.implicits._
-      addCalls(g, o.rows.map(r => (r.src, r.dst, r.pos, r.text))
-        .toDF("src", "dst", "pos", "text"))
   }
 }

@@ -1,7 +1,9 @@
 package graft.graph
 
 import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
+import com.fasterxml.jackson.databind.annotation.JsonDeserialize
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** Mutation op-log: the time-travel backbone (SURVEY.md §2.1 C8, §2.4 M11).
   *
@@ -13,33 +15,31 @@ import com.fasterxml.jackson.module.scala.DefaultScalaModule
   * identical, since the reference only ever logs its own fixed query set
   * (MERGE-by-key upserts and delete-by-key cascades).
   *
+  * Batch ops are the only logged form: the four ingest batches
+  * (`AddEntitiesBatch`, `AddFilesBatch`, `ConnectEntitiesBatch`,
+  * `AddCallsBatch`) plus the three keyed rewrites `DeleteFiles`,
+  * `SetFilesCoverage` and `SetNodesMetadata`. Each ingest batch owns both
+  * directions of its row format — the companion's `fromRows` (capture,
+  * from the collected batch) and `toDF` (replay, back to the DataFrame the
+  * batch mutation takes) — so capture and replay run the same typed batch
+  * mutation.
+  *
   * Replay fidelity (SURVEY §7.4): ops that reference node IDs (edge
   * connects, metadata updates) replay correctly because ID assignment is
-  * deterministic (sorted-batch sequential assignment in
-  * [[Mutations.assignIds]]) — replaying the same ops from the same start
-  * state reproduces identical IDs.
+  * deterministic (sorted-batch sequential assignment in [[Mutations]]) —
+  * replaying the same ops from the same start state reproduces identical
+  * IDs.
   */
 sealed trait GraphOp
 object GraphOp {
   final case class FileKey(path: String, name: String, ext: String)
 
-  final case class AddEntity(label: String, name: String, path: String,
-      srcStart: Long, srcEnd: Long, doc: String,
-      props: Map[String, String]) extends GraphOp
-  final case class AddFile(path: String, name: String, ext: String) extends GraphOp
-  final case class ConnectEntities(src: Long, dst: Long, relType: String,
-      props: Map[String, String]) extends GraphOp
-  final case class AddCall(callerId: Long, calleeId: Long, pos: Long) extends GraphOp
-  final case class SetNodesMetadata(ids: Seq[Long],
+  /** `contentAs`: erasure hides the element type, and Jackson would
+    * otherwise decode small ids as Integers. */
+  final case class SetNodesMetadata(
+      @JsonDeserialize(contentAs = classOf[java.lang.Long]) ids: Seq[Long],
       values: Seq[Map[String, String]]) extends GraphOp
-  final case class SetFileCoverage(path: String, name: String, ext: String,
-      coverage: Double) extends GraphOp
   final case class DeleteFiles(files: Seq[FileKey]) extends GraphOp
-  final case class AddCommit(hash: String, author: String, message: String,
-      date: Long) extends GraphOp
-  final case class ConnectCommits(childHash: String, parentHash: String) extends GraphOp
-  final case class SetTransition(fromHash: String, toHash: String,
-      relType: String, queries: Seq[String], params: Seq[String]) extends GraphOp
 
   // ---- batch rows (history re-analysis capture; SURVEY §2.6 F5) --------
   // The reference backlogs one Cypher query per entity during the history
@@ -53,10 +53,64 @@ object GraphOp {
       props: Map[String, String])
   final case class CallRow(src: Long, dst: Long, pos: Long, text: String)
 
-  final case class AddEntitiesBatch(rows: Seq[EntityRow]) extends GraphOp
-  final case class AddFilesBatch(rows: Seq[FileKey]) extends GraphOp
-  final case class ConnectEntitiesBatch(rows: Seq[EdgeRow]) extends GraphOp
-  final case class AddCallsBatch(rows: Seq[CallRow]) extends GraphOp
+  private def propsOf(r: Row): Map[String, String] =
+    Option(r.getAs[scala.collection.Map[String, String]]("props"))
+      .map(_.toMap).getOrElse(Map.empty)
+
+  final case class AddEntitiesBatch(rows: Seq[EntityRow]) extends GraphOp {
+    def toDF(spark: SparkSession): DataFrame = {
+      import spark.implicits._
+      rows.map(r => (r.label, r.name, r.path, r.srcStart, r.srcEnd, r.doc, r.props))
+        .toDF("label", "name", "path", "src_start", "src_end", "doc", "props")
+    }
+  }
+  object AddEntitiesBatch {
+    def fromRows(rows: Seq[Row]): AddEntitiesBatch =
+      AddEntitiesBatch(rows.map(r => EntityRow(
+        r.getAs[String]("label"), r.getAs[String]("name"),
+        r.getAs[String]("path"), r.getAs[Long]("src_start"),
+        r.getAs[Long]("src_end"), r.getAs[String]("doc"), propsOf(r))))
+  }
+
+  final case class AddFilesBatch(rows: Seq[FileKey]) extends GraphOp {
+    def toDF(spark: SparkSession): DataFrame = {
+      import spark.implicits._
+      rows.map(r => (r.path, r.name, r.ext)).toDF("path", "name", "ext")
+    }
+  }
+  object AddFilesBatch {
+    def fromRows(rows: Seq[Row]): AddFilesBatch =
+      AddFilesBatch(rows.map(r => FileKey(r.getAs[String]("path"),
+        r.getAs[String]("name"), r.getAs[String]("ext"))))
+  }
+
+  final case class ConnectEntitiesBatch(rows: Seq[EdgeRow]) extends GraphOp {
+    def toDF(spark: SparkSession): DataFrame = {
+      import spark.implicits._
+      rows.map(r => (r.src, r.dst, r.relType, r.props))
+        .toDF("src", "dst", "type", "props")
+    }
+  }
+  object ConnectEntitiesBatch {
+    def fromRows(rows: Seq[Row]): ConnectEntitiesBatch =
+      ConnectEntitiesBatch(rows.map(r => EdgeRow(r.getAs[Long]("src"),
+        r.getAs[Long]("dst"), r.getAs[String]("type"), propsOf(r))))
+  }
+
+  final case class AddCallsBatch(rows: Seq[CallRow]) extends GraphOp {
+    def toDF(spark: SparkSession): DataFrame = {
+      import spark.implicits._
+      rows.map(r => (r.src, r.dst, r.pos, r.text))
+        .toDF("src", "dst", "pos", "text")
+    }
+  }
+  object AddCallsBatch {
+    def fromRows(rows: Seq[Row]): AddCallsBatch =
+      AddCallsBatch(rows.map(r => CallRow(r.getAs[Long]("src"),
+        r.getAs[Long]("dst"), r.getAs[Long]("pos"),
+        if (r.schema.fieldNames.contains("text")) r.getAs[String]("text")
+        else null)))
+  }
 
   /** M6 batch row: one tracefile record's file percentage. */
   final case class FileCoverageRow(path: String, name: String, ext: String,
@@ -96,26 +150,18 @@ object OpLog {
     mapper.writeValueAsString(node)
   }
 
+  /** Every loggable op class, by the discriminator [[encode]] writes. */
+  private val kinds: Map[String, Class[_ <: GraphOp]] = Seq(
+    classOf[AddEntitiesBatch], classOf[AddFilesBatch],
+    classOf[ConnectEntitiesBatch], classOf[AddCallsBatch],
+    classOf[DeleteFiles], classOf[SetFilesCoverage], classOf[SetNodesMetadata]
+  ).map(c => c.getSimpleName -> c).toMap
+
   def decode(json: String): GraphOp = {
     val tree = mapper.readTree(json)
-    val data = tree.get("data")
-    tree.get("op").asText() match {
-      case "AddEntity" => mapper.treeToValue(data, classOf[AddEntity])
-      case "AddFile" => mapper.treeToValue(data, classOf[AddFile])
-      case "ConnectEntities" => mapper.treeToValue(data, classOf[ConnectEntities])
-      case "AddCall" => mapper.treeToValue(data, classOf[AddCall])
-      case "SetNodesMetadata" => mapper.treeToValue(data, classOf[SetNodesMetadata])
-      case "SetFileCoverage" => mapper.treeToValue(data, classOf[SetFileCoverage])
-      case "DeleteFiles" => mapper.treeToValue(data, classOf[DeleteFiles])
-      case "AddCommit" => mapper.treeToValue(data, classOf[AddCommit])
-      case "ConnectCommits" => mapper.treeToValue(data, classOf[ConnectCommits])
-      case "SetTransition" => mapper.treeToValue(data, classOf[SetTransition])
-      case "AddEntitiesBatch" => mapper.treeToValue(data, classOf[AddEntitiesBatch])
-      case "AddFilesBatch" => mapper.treeToValue(data, classOf[AddFilesBatch])
-      case "ConnectEntitiesBatch" => mapper.treeToValue(data, classOf[ConnectEntitiesBatch])
-      case "AddCallsBatch" => mapper.treeToValue(data, classOf[AddCallsBatch])
-      case "SetFilesCoverage" => mapper.treeToValue(data, classOf[SetFilesCoverage])
-      case other => throw new IllegalArgumentException(s"unknown op: $other")
-    }
+    val name = tree.get("op").asText()
+    val cls = kinds.getOrElse(name,
+      throw new IllegalArgumentException(s"unknown op: $name"))
+    mapper.treeToValue(tree.get("data"), cls)
   }
 }

@@ -195,16 +195,6 @@ object Bpe {
             .otherwise(concat(acc, array(x)))
         })
 
-  /** A/B instrument (round 17): `GRAFT_BPE_TWIN=1` swaps the native merge
-    * kernel for its spec twin [[applyMergeMapFold]] inside the trainers —
-    * used only for the cold driver-protocol comparison the round-16
-    * verdict asked for (kernel vs twin on t20/t39/st16/q38). Default (and
-    * every driver run) is the kernel; BpeSpec pins the two element-for-
-    * element, so the toggle cannot change any result. */
-  private[pipeline] def mergeApply(syms: Column, m: Column): Column =
-    if (sys.env.get("GRAFT_BPE_TWIN").contains("1")) applyMergeMapFold(syms, m)
-    else graft.functions.BpeMergePass.of(syms, m)
-
   /** Train `numMerges` merges on the corpus. Stops early (fewer merges)
     * only if the vocabulary runs out of adjacent pairs — callers that pair
     * the result with the unrolled SQL oracle must pick `numMerges` below
@@ -359,7 +349,7 @@ object Bpe {
         // as the spec twin BpeSpec pins element-for-element
         words = words.crossJoin(broadcast(bdf))
           .select(col("word"), col("cnt"),
-            mergeApply(col("syms"), col("_m")).as("syms"))
+            graft.functions.BpeMergePass.of(col("syms"), col("_m")).as("syms"))
           .localCheckpoint(false)
       }
     }

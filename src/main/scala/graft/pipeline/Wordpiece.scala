@@ -194,7 +194,7 @@ object Wordpiece {
         // same fold semantics, no per-element accumulator copy
         words = words.crossJoin(broadcast(bdf))
           .select(col("word"), col("cnt"),
-            Bpe.mergeApply(col("syms"), col("_m")).as("syms"))
+            graft.functions.BpeMergePass.of(col("syms"), col("_m")).as("syms"))
           .localCheckpoint(false)
       }
     }

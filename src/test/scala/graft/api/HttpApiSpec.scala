@@ -105,4 +105,20 @@ class HttpApiSpec extends SparkSpec {
       assert(get(port, "/list_repos", Some("s3cret")).statusCode() == 200)
     } finally api.stop()
   }
+
+  test("a failing chat client answers 500 (index.py:90-94)") {
+    val failing = new ChatClient {
+      def ask(repo: String, question: String,
+          g: graft.graph.PropertyGraph): String =
+        throw new RuntimeException("chat backend down")
+    }
+    val api = new HttpApi(spark, store, chat = failing, secretToken = None,
+      publicAccess = false)
+    val port = api.start(0)
+    try {
+      val r = post(port, "/chat", """{"repo":"proj","msg":"who calls beta"}""")
+      assert(r.statusCode() == 500)
+      assert(r.body() == """{"status":"Internal server error"}""")
+    } finally api.stop()
+  }
 }

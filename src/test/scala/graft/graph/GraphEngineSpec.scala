@@ -1,16 +1,13 @@
 package graft.graph
 
 import graft.SparkSpec
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Exercises SURVEY.md §7.2's minimum end-to-end slice: the Python fixture
-  * graph from the reference (`/root/reference/tests/source_files/py/src.py`,
-  * golden assertions `tests/test_py_analyzer.py:28-59` / FIXTURES.md §1.1)
-  * built through the mutation API, then queried. */
-class GraphEngineSpec extends SparkSpec {
-
-  /** Build the FIXTURES.md §1.1 graph via the batch mutation API. */
-  def buildFixture(): CodeGraph = {
+object GraphEngineSpec {
+  /** Build the FIXTURES.md §1.1 graph via the batch mutation API. IDs:
+    * src.py 1, Task 2, __init__ 3, abort 4, log 5, print 6. */
+  def buildFixture(spark: SparkSession): CodeGraph = {
     import spark.implicits._
     val g = new CodeGraph(spark, "pyfixture")
     g.addFiles(Seq(("", "src.py", ".py")).toDF("path", "name", "ext"))
@@ -41,6 +38,14 @@ class GraphEngineSpec extends SparkSpec {
       .toDF("src", "dst", "pos"))
     g
   }
+}
+
+/** Exercises SURVEY.md §7.2's minimum end-to-end slice: the Python fixture
+  * graph from the reference (`/root/reference/tests/source_files/py/src.py`,
+  * golden assertions `tests/test_py_analyzer.py:28-59` / FIXTURES.md §1.1)
+  * built through the mutation API, then queried. */
+class GraphEngineSpec extends SparkSpec {
+  def buildFixture(): CodeGraph = GraphEngineSpec.buildFixture(spark)
 
   test("golden: function_called_by(print) == {__init__, log} and function_calls(abort) == {log}") {
     val g = buildFixture()
@@ -125,7 +130,8 @@ class GraphEngineSpec extends SparkSpec {
 
   test("set_file_coverage == 1.0 cascades to defined functions") {
     val g = buildFixture()
-    val res = g.mutate(GraphOp.SetFileCoverage("", "src.py", ".py", 1.0))
+    val res = g.mutate(GraphOp.SetFilesCoverage(
+      Seq(GraphOp.FileCoverageRow("", "src.py", ".py", 1.0))))
     val covered = res.graph.nodes
       .filter(col("coverage_precentage") === 1.0)
       .select("name").collect().map(_.getString(0)).toSet
@@ -146,11 +152,15 @@ class GraphEngineSpec extends SparkSpec {
   }
 
   test("op-log capture + replay reproduces the same graph with identical IDs") {
+    import spark.implicits._
     val g = buildFixture()
     g.enableBacklog()
-    g.mutate(GraphOp.AddEntity("Function", "extra", "src.py", 20L, 22L, "",
-      Map.empty))
-    g.mutate(GraphOp.SetFileCoverage("", "src.py", ".py", 0.7))
+    // captured through the batch API, the path history walks log through
+    g.addEntities(Seq(
+      ("Function", "extra", "src.py", 20L, 22L, "", Map.empty[String, String])
+    ).toDF("label", "name", "path", "src_start", "src_end", "doc", "props"))
+    g.mutate(GraphOp.SetFilesCoverage(
+      Seq(GraphOp.FileCoverageRow("", "src.py", ".py", 0.7))))
     val ops = g.getBacklog
     assert(ops.length === 2, "both changing ops logged")
 
@@ -172,7 +182,8 @@ class GraphEngineSpec extends SparkSpec {
     val file = g.graph.nodes
       .filter(array_contains(col("labels"), "File")).head().getAs[Long]("id")
     val task = GraphQueries.getByName(g.graph, "Class", "Task").head().getAs[Long]("id")
-    val res = g.mutate(GraphOp.ConnectEntities(file, task, "DEFINES", Map.empty))
+    val res = g.connectEntities(Seq((file, task, "DEFINES", Map.empty[String, String]))
+      .toDF("src", "dst", "type", "props"))
     assert(!res.summary.changed)
     assert(g.getBacklog.isEmpty)
   }
@@ -186,16 +197,17 @@ class GraphEngineSpec extends SparkSpec {
   }
 
   test("commit graph: add/connect/list/transitions") {
+    import spark.implicits._
     val g = new CodeGraph(spark, "repo_git")
-    g.mutate(GraphOp.AddCommit("c1", "alice", "first", 100L))
-    g.mutate(GraphOp.AddCommit("c2", "bob", "second", 200L))
-    g.mutate(GraphOp.AddCommit("c3", "carol", "third", 300L))
-    g.mutate(GraphOp.ConnectCommits("c2", "c1")) // c2's parent is c1
-    g.mutate(GraphOp.ConnectCommits("c3", "c2"))
-    g.mutate(GraphOp.SetTransition("c3", "c2", "PARENT",
-      Seq("""{"op":"x"}"""), Seq("{}")))
-    g.mutate(GraphOp.SetTransition("c2", "c1", "PARENT",
-      Seq("""{"op":"y"}"""), Seq("{}")))
+    g.addCommits(Seq(("c1", "alice", "first", 100L), ("c2", "bob", "second", 200L),
+      ("c3", "carol", "third", 300L)).toDF("hash", "author", "message", "date"))
+    // c2's parent is c1, c3's is c2
+    g.connectCommitsBatch(Seq(("c2", "c1"), ("c3", "c2"))
+      .toDF("child_hash", "parent_hash"))
+    g.setTransitions(Seq(
+      ("c3", "c2", "PARENT", Seq("""{"op":"x"}"""), Seq("{}")),
+      ("c2", "c1", "PARENT", Seq("""{"op":"y"}"""), Seq("{}"))
+    ).toDF("from_hash", "to_hash", "rel_type", "queries", "params"))
 
     val commits = GraphQueries.listCommits(g.graph).collect()
     assert(commits.map(_.getAs[String]("hash")).toSeq === Seq("c1", "c2", "c3"))
